@@ -32,8 +32,25 @@ object Tables {
     * staleness discipline): a regenerated table misses the key and
     * re-reads its footer. Every action still scans the parquet files;
     * results and file listings are never cached here. */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]
+  private val schemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, SchemaSlot]
+
+  /** One key's footer schema, inferred at most once at a time: the
+    * single flight is this slot's monitor, never the map's bin lock —
+    * `computeIfAbsent` would hold that lock for the whole inference
+    * JOB, so a miss on any key hashing to the same bin would wait
+    * behind it (the [[graft.queries.TextOps]] memo's r15 finding).
+    * Concurrent misses on one key run one job; different keys never
+    * block each other; an inference that throws leaves the slot empty,
+    * so the next call retries instead of caching the failure. */
+  private final class SchemaSlot {
+    private var schema: org.apache.spark.sql.types.StructType = _
+    def get(infer: => org.apache.spark.sql.types.StructType)
+        : org.apache.spark.sql.types.StructType = synchronized {
+      if (schema == null) schema = infer
+      schema
+    }
+  }
 
   /** Shared by the table loaders above and the artifact/lake readers
     * ([[graft.sources.ArtifactStore]]): one fingerprint-guarded schema
@@ -41,8 +58,8 @@ object Tables {
   private[graft] def readParquetCached(spark: SparkSession, path: String)
       : DataFrame = {
     val key = s"$path@${fileFingerprint(spark, path)}"
-    val schema = schemaCache.computeIfAbsent(key,
-      _ => spark.read.parquet(path).schema)
+    val schema = schemaCache.computeIfAbsent(key, _ => new SchemaSlot)
+      .get(spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
 

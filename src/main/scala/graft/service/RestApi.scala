@@ -57,11 +57,6 @@ final class RestApi(spark: Option[SparkSession], port: Int = 0) {
         indexStatus.set(json)
       }
     }
-  // head-artifact row counts, keyed by artifact path (immutable once
-  // published), so a repeat no-op POST /index/maintain runs ZERO
-  // Spark jobs — the resume probe is FS-only and the response's
-  // sanity numbers come from this cache; a chain that built anything
-  // recounts (a crash-retried head may have been rebuilt)
   private val lakeCompactLock = new Object
   private val lakeCompactSeq = new java.util.concurrent.atomic.AtomicLong(0L)
   /** Compaction job states keyed by (base, table) — one global slot
@@ -87,8 +82,14 @@ final class RestApi(spark: Option[SparkSession], port: Int = 0) {
       .flatMap(k => Option(lakeCompactJobs.get(k))).map(_._2)
       .getOrElse("""{"state":"idle"}""")
 
+  // head-artifact row counts, keyed by artifact path (immutable once
+  // published), so a repeat no-op POST /index/maintain runs ZERO
+  // Spark jobs — the resume probe is FS-only and the response's
+  // sanity numbers come from this cache; a chain that built anything
+  // recounts (a crash-retried head may have been rebuilt). Concurrent:
+  // the walk's chains update it from their own pool threads
   private val maintainCounts =
-    scala.collection.mutable.Map.empty[String, Long]
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
 
@@ -346,22 +347,40 @@ final class RestApi(spark: Option[SparkSession], port: Int = 0) {
 
   // R7 extension: derived-index maintenance as a job — one POST brings
   // every artifact chain (verbatim-window index, LSH signatures,
-  // duplicate clusters, CMS + KMV sketches, retrieval tf-grain over
-  // the documents lake; IVF over the embeddings lake) up to its
-  // lake's current version. RESUME-FROM-NEWEST: each chain is probed
-  // BACKWARD from the current version with one cheap _SUCCESS check
-  // per step until its newest existing artifact is found, and only the
-  // missing suffix is built (each step the incremental merge, never a
-  // silent full rebuild) — so a no-op call does O(chains) FS probes
-  // regardless of chain depth, and a call retried after a mid-walk
-  // crash re-builds exactly the versions the crash left missing. Only
-  // the CURRENT version's artifact is counted (the operator-eyeball
-  // sanity number), prior steps publish without a count job, and the
-  // head counts are CACHED by artifact path (immutable once
-  // published), so a REPEAT no-op call runs zero Spark jobs — the
-  // first no-op call on a fresh server pays one bounded count job per
-  // chain. `"async": true` returns 202 immediately and exposes
-  // progress at GET /index/status — the /etl/run posture.
+  // duplicate clusters, CMS + KMV sketches, retrieval tf-grain,
+  // doc lengths, corpus stats, frozen-LM scores over the documents
+  // lake; IVF over the embeddings lake) up to its lake's current
+  // version. The walk is a dependency DAG run on a driver pool of
+  // `defaultParallelism` threads (capped at the node count), so
+  // independent chains overlap their jobs and their driver-side
+  // planning instead of queueing behind one another:
+  //   roots: the two lake publishes (documents, embeddings) — they
+  //     write disjoint bases;
+  //   the nine document chains wait for the documents lake, IVF for
+  //     the embeddings lake;
+  //   clusters wait for signatures (the cluster frame reads the
+  //     signature artifact at the same version);
+  //   corpus_stats waits for doc_lens (it subtracts removals through
+  //     the previous length artifact and falls back to the current).
+  // With these edges no two nodes publish the same artifact. A failed
+  // node fails only its dependents; the rest finish, and the reply is
+  // `failed` with the first failure in declaration order (a root
+  // cause: dependencies are declared before their dependents).
+  // RESUME-FROM-NEWEST, per chain: probed BACKWARD from the current
+  // version with one cheap _SUCCESS check per step until its newest
+  // existing artifact is found, and only the missing suffix is built
+  // (each step the incremental merge, never a silent full rebuild) —
+  // so a no-op call does O(chains) FS probes regardless of chain
+  // depth, and a call retried after a mid-walk crash re-builds exactly
+  // the versions the crash left missing. Only the CURRENT version's
+  // artifact is counted (the operator-eyeball sanity number), prior
+  // steps publish without a count job, and the head counts are CACHED
+  // by artifact path (immutable once published), so a REPEAT no-op
+  // call runs zero Spark jobs — the first no-op call on a fresh server
+  // pays one bounded count job per chain. Each chain reports its wall
+  // time as `<chain>_ms`, and its jobs carry the job description
+  // `maintain:<chain>`. `"async": true` returns 202 immediately and
+  // exposes progress at GET /index/status — the /etl/run posture.
   server.createContext("/index/maintain", (ex: HttpExchange) =>
     (spark, ex.getRequestMethod) match {
       case (None, _) => reply(ex, 503, """{"detail":"no spark session"}""")
@@ -374,77 +393,118 @@ final class RestApi(spark: Option[SparkSession], port: Int = 0) {
           case Some(dir) =>
             val async = boolField(body, "async").getOrElse(false)
             def run(): String = maintainLock.synchronized {
-              try {
-                import graft.queries.{Analytics, Dedup, Similarity, TextOps}
-                import graft.sources.{ArtifactStore, Versioned}
-                val base = Dedup.versionedCorpus(s, dir)
-                val v = Versioned.currentVersion(s, base).getOrElse(
-                  sys.error(s"no committed version at $base"))
-                val emb = Similarity.versionedVectors(s, dir)
-                val ev = Versioned.currentVersion(s, emb).getOrElse(
-                  sys.error(s"no committed version at $emb"))
-                // resume point: newest version whose artifact exists;
-                // build the missing (resume, last] suffix only, then
-                // count the head artifact
-                final case class Chain(name: String, last: Long,
-                    artifact: Long => String,
-                    at: Long => org.apache.spark.sql.DataFrame)
-                val chains = Seq(
-                  Chain("windows", v, Dedup.windowIndexArtifact(base, _),
-                    Dedup.windowIndexAt(s, base, _)),
-                  Chain("signatures", v,
-                    Dedup.signatureIndexArtifact(base, _),
-                    Dedup.signatureIndexAt(s, base, _)),
-                  Chain("clusters", v, Dedup.clusterArtifact(base, _),
-                    Dedup.clusterAssignmentAt(s, base, _)),
-                  Chain("cms_rows", v, Analytics.cmsArtifact(base, _),
-                    Analytics.cmsAt(s, base, _)),
-                  Chain("kmv_sources", v, Analytics.kmvArtifact(base, _),
-                    Analytics.kmvAt(s, base, _)),
-                  Chain("tf_grain", v, TextOps.tfGrainArtifact(base, _),
-                    TextOps.tfGrainAt(s, base, _)),
-                  // doc_lens MUST precede corpus_stats: the stats
-                  // chain's removal subtraction reads the previous
-                  // version's length artifact
-                  Chain("doc_lens", v, TextOps.docLenArtifact(base, _),
-                    TextOps.docLenAt(s, base, _)),
-                  Chain("corpus_stats", v,
-                    TextOps.corpusStatsArtifact(base, _),
-                    TextOps.corpusStatsAt(s, base, _)),
-                  Chain("lm_scores", v, TextOps.lmScoreArtifact(base, _),
-                    TextOps.lmScoresAt(s, base, _)),
-                  Chain("ivf_vectors", ev,
-                    Similarity.ivfIndexArtifact(emb, _),
-                    Similarity.ivfIndexAt(s, emb, _)))
-                var built = 0L
-                val counts = chains.map { c =>
-                  val resume = (c.last to 1L by -1L)
-                    .find(k => ArtifactStore.exists(s, c.artifact(k)))
-                  val todo = resume match {
-                    case Some(k) => (k + 1) to c.last
-                    case None => 1L to c.last
-                  }
-                  todo.foreach { k => c.at(k); built += 1 }
-                  val head = c.artifact(c.last)
-                  val n = if (todo.nonEmpty) {
-                    val x = c.at(c.last).count()
-                    maintainCounts(head) = x
-                    x
-                  } else maintainCounts.getOrElseUpdate(head,
-                    c.at(c.last).count())
-                  (c.name, n, todo.size)
+              import java.util.concurrent.{CompletableFuture, CompletionException}
+              import graft.queries.{Analytics, Dedup, Similarity, TextOps}
+              import graft.sources.{ArtifactStore, Versioned}
+              def failed(e: Throwable): String =
+                s"""{"state":"failed","detail":"${esc(String.valueOf(e.getMessage))}"}"""
+              final case class Lake(name: String, publish: () => String)
+              final case class Chain(name: String, lake: Lake,
+                  after: Option[String], artifact: (String, Long) => String,
+                  at: (String, Long) => org.apache.spark.sql.DataFrame)
+              val corpus = Lake("corpus", () => Dedup.versionedCorpus(s, dir))
+              val vectors =
+                Lake("vectors", () => Similarity.versionedVectors(s, dir))
+              val chains = Seq(
+                Chain("windows", corpus, None, Dedup.windowIndexArtifact,
+                  Dedup.windowIndexAt(s, _, _)),
+                Chain("signatures", corpus, None,
+                  Dedup.signatureIndexArtifact, Dedup.signatureIndexAt(s, _, _)),
+                // the cluster frame reads signatureIndexAt(v)
+                Chain("clusters", corpus, Some("signatures"),
+                  Dedup.clusterArtifact, Dedup.clusterAssignmentAt(s, _, _)),
+                Chain("cms_rows", corpus, None, Analytics.cmsArtifact,
+                  Analytics.cmsAt(s, _, _)),
+                Chain("kmv_sources", corpus, None, Analytics.kmvArtifact,
+                  Analytics.kmvAt(s, _, _)),
+                Chain("tf_grain", corpus, None, TextOps.tfGrainArtifact,
+                  TextOps.tfGrainAt(s, _, _)),
+                Chain("doc_lens", corpus, None, TextOps.docLenArtifact,
+                  TextOps.docLenAt(s, _, _)),
+                // the stats frame reads docLenArtifact(v - 1) and, as
+                // its fallback, docLenAt(v)
+                Chain("corpus_stats", corpus, Some("doc_lens"),
+                  TextOps.corpusStatsArtifact, TextOps.corpusStatsAt(s, _, _)),
+                Chain("lm_scores", corpus, None, TextOps.lmScoreArtifact,
+                  TextOps.lmScoresAt(s, _, _)),
+                Chain("ivf_vectors", vectors, None,
+                  Similarity.ivfIndexArtifact, Similarity.ivfIndexAt(s, _, _)))
+              val lakes = Seq(corpus, vectors)
+              val threads = new java.util.concurrent.atomic.AtomicInteger
+              val walkers = java.util.concurrent.Executors.newFixedThreadPool(
+                math.min(s.sparkContext.defaultParallelism,
+                  lakes.size + chains.size),
+                (r: Runnable) => {
+                  val t = new Thread(r,
+                    s"graft-maintain-${threads.incrementAndGet()}")
+                  t.setDaemon(true)
+                  t
+                })
+              // a node runs once every dependency succeeded; a failed
+              // dependency completes it exceptionally without running it
+              def node[A](name: String, deps: Seq[CompletableFuture[_]])(
+                  body: => A): CompletableFuture[A] =
+                CompletableFuture.allOf(deps: _*).thenApplyAsync[A](
+                  (_: Void) => {
+                    s.sparkContext.setJobDescription(s"maintain:$name")
+                    try body finally s.sparkContext.setJobDescription(null)
+                  }, walkers)
+              def failure(f: CompletableFuture[_]): Option[Throwable] =
+                try { f.join(); None } catch {
+                  case e: CompletionException =>
+                    Some(Option(e.getCause).getOrElse(e))
                 }
-                val summary =
-                  s"""{"state":"done","lake":"${esc(base)}",""" +
-                    s""""version":$v,"steps_built":$built,""" +
-                    counts.map { case (k, n, b) =>
-                      s""""$k":$n,"${k}_built":$b""" }.mkString(",") + "}"
-                summary
+              try {
+                val lakeAt = lakes.map(l => l -> node(l.name, Nil) {
+                  val base = l.publish()
+                  base -> Versioned.currentVersion(s, base).getOrElse(
+                    sys.error(s"no committed version at $base"))
+                }).toMap
+                // (head count, versions built, wall ms) per chain
+                val walked = chains.foldLeft(
+                    Map.empty[String, CompletableFuture[(Long, Int, Long)]]) {
+                  (done, c) =>
+                    val lake = lakeAt(c.lake)
+                    val deps = (lake: CompletableFuture[_]) +: c.after.map(done).toSeq
+                    done + (c.name -> node(c.name, deps) {
+                      val t0 = System.nanoTime()
+                      val (base, last) = lake.join()
+                      // resume point: newest version whose artifact
+                      // exists; build the missing (resume, last] suffix
+                      // only, then count the head artifact
+                      val resume = (last to 1L by -1L)
+                        .find(k => ArtifactStore.exists(s, c.artifact(base, k)))
+                      val todo = resume.fold(1L to last)(k => (k + 1) to last)
+                      todo.foreach(k => c.at(base, k))
+                      val head = c.artifact(base, last)
+                      val cached =
+                        if (todo.isEmpty) Option(maintainCounts.get(head)) else None
+                      val n = cached.fold {
+                        val x = c.at(base, last).count()
+                        maintainCounts.put(head, x)
+                        x
+                      }(_.longValue)
+                      (n, todo.size, (System.nanoTime() - t0) / 1000000L)
+                    })
+                }
+                // wait for EVERY node, then report the first failure in
+                // declaration order
+                val failures = (lakes.map(lakeAt) ++ chains.map(c => walked(c.name)))
+                  .map(failure)
+                failures.flatten.headOption match {
+                  case Some(e) => failed(e)
+                  case None =>
+                    val (base, v) = lakeAt(corpus).join()
+                    val counts = chains.map(c => c.name -> walked(c.name).join())
+                    s"""{"state":"done","lake":"${esc(base)}",""" +
+                      s""""version":$v,"steps_built":${counts.map(_._2._2).sum},""" +
+                      counts.map { case (k, (n, b, ms)) =>
+                        s""""$k":$n,"${k}_built":$b,"${k}_ms":$ms""" }
+                        .mkString(",") + "}"
+                }
               } catch {
-                case e: Exception =>
-                  s"""{"state":"failed","detail":"${
-                    esc(String.valueOf(e.getMessage))}"}"""
-              }
+                case e: Exception => failed(e)
+              } finally walkers.shutdown()
             }
             val seq = maintainSeq.incrementAndGet()
             def runAndPublish(): String = {
@@ -1081,9 +1141,9 @@ object RestApi {
       |"/query/daily_totals":{"get":{"summary":"daily_company_totals rows in a date range (capped at 1000 rows; X-Graft-Truncated header signals an incomplete page); base= computes the view against a versioned lake instead of the session view, with version= or asOf= (epoch ms | ISO-8601) time-travelling to a historical commit",
       | "parameters":[{"name":"from","in":"query","required":true,"schema":{"type":"string","format":"date"}},{"name":"to","in":"query","required":true,"schema":{"type":"string","format":"date"}},{"name":"limit","in":"query","schema":{"type":"integer","default":1000,"maximum":1000}}],
       | "responses":{"200":{"description":"rows"},"409":{"description":"run /etl/run first"},"422":{"description":"bad dates"},"503":{"description":"no spark session"}}}},
-      |"/index/maintain":{"post":{"summary":"Bring every derived-index chain (windows, signatures, clusters, CMS, KMV, tf-grain, doc-lengths, corpus-stats, frozen-LM scores, IVF) to its lake's current version; resumes each chain from its newest existing artifact (head counts cached: a repeat no-op call runs zero Spark jobs)",
+      |"/index/maintain":{"post":{"summary":"Bring every derived-index chain (windows, signatures, clusters, CMS, KMV, tf-grain, doc-lengths, corpus-stats, frozen-LM scores, IVF) to its lake's current version, walked as a dependency DAG on a pool of defaultParallelism driver threads: the documents and embeddings lake publishes are the roots, the nine document chains follow the documents lake and IVF the embeddings lake, clusters wait for signatures and corpus-stats for doc-lengths; a failed node fails only its dependents. Resumes each chain from its newest existing artifact (head counts cached: a repeat no-op call runs zero Spark jobs)",
       |  "requestBody":{"content":{"application/json":{"schema":{"properties":{"dir":{"type":"string"},"async":{"type":"boolean","default":false}},"required":["dir"]}}}},
-      |  "responses":{"200":{"description":"chains current; per-artifact row counts + versions built"},"202":{"description":"async maintenance started"},"422":{"description":"dir missing"},"500":{"description":"maintenance failed"},"503":{"description":"no spark session"}}}},
+      |  "responses":{"200":{"description":"chains current; per-chain head row count, versions built and wall ms"},"202":{"description":"async maintenance started"},"422":{"description":"dir missing"},"500":{"description":"maintenance failed"},"503":{"description":"no spark session"}}}},
       |"/index/status":{"get":{"summary":"Last/current index-maintenance state",
       | "responses":{"200":{"description":"idle|running|done|failed"}}}},
       |"/query/run":{"get":{"summary":"Run a registered engine query by name",

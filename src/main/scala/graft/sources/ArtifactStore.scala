@@ -74,15 +74,29 @@ object ArtifactStore {
       val staging = new Path(outPath.getParent,
         s".staging-${outPath.getName}-${java.util.UUID.randomUUID}")
       build.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-      fs.mkdirs(outPath.getParent)
-      // an `out` without _SUCCESS is a crashed publish — clear it; a
-      // failed rename means a concurrent winner published a
-      // value-identical table — drop ours and read theirs
-      if (fs.exists(outPath) && !fs.exists(new Path(outPath, "_SUCCESS")))
-        fs.delete(outPath, true)
-      if (!fs.rename(staging, outPath)) fs.delete(staging, true)
+      promote(fs, staging, outPath)
     }
     graft.Tables.readParquetCached(spark, out)
+  }
+
+  /** Promote a finished `staging` dir to `outPath` by atomic rename.
+    * An `outPath` without _SUCCESS is a crashed publish — cleared
+    * first. Losing the race to a concurrent publisher of the same
+    * (value-identical) table shows up one of two ways: the rename
+    * fails, or — Hadoop's semantics for a rename onto an EXISTING
+    * directory, the local FS included — it "succeeds" by moving the
+    * staging dir INSIDE the winner's artifact, where parquet readers
+    * skip it as hidden and its bytes would leak unseen. Either way
+    * ours is dropped and the winner's is read. */
+  private def promote(fs: org.apache.hadoop.fs.FileSystem,
+      staging: org.apache.hadoop.fs.Path,
+      outPath: org.apache.hadoop.fs.Path): Unit = {
+    import org.apache.hadoop.fs.Path
+    fs.mkdirs(outPath.getParent)
+    if (fs.exists(outPath) && !fs.exists(new Path(outPath, "_SUCCESS")))
+      fs.delete(outPath, true)
+    if (!fs.rename(staging, outPath)) fs.delete(staging, true)
+    else fs.delete(new Path(outPath, staging.getName), true)
   }
 
   /** [[readOrPublish]] with a BUCKETED layout: the artifact is written
@@ -139,10 +153,7 @@ object ArtifactStore {
         .option("path", staging.toString)
         .saveAsTable(stageTable)
       spark.sql(s"DROP TABLE IF EXISTS $stageTable") // external: files stay
-      fs.mkdirs(outPath.getParent)
-      if (fs.exists(outPath) && !fs.exists(new Path(outPath, "_SUCCESS")))
-        fs.delete(outPath, true)
-      if (!fs.rename(staging, outPath)) fs.delete(staging, true)
+      promote(fs, staging, outPath)
     }
     bucketedTable(spark, out, bucketCol, buckets)
   }
@@ -184,16 +195,24 @@ object ArtifactStore {
           .TableIdentifier(name))
         .properties.get("graft.success.mtime")
       if (!recorded.contains(mtime))
-        spark.sql(s"DROP TABLE $name")
+        spark.sql(s"DROP TABLE IF EXISTS $name")
     }
     if (!spark.catalog.tableExists(name)) {
       val schemaDdl = spark.read.parquet(out).schema.toDDL
-      spark.sql(
-        s"""CREATE TABLE $name ($schemaDdl) USING PARQUET
+      // a concurrent reader of the same artifact may register it
+      // between the probe above and this CREATE (Spark's own IF NOT
+      // EXISTS check is not atomic with the create): same path, same
+      // layout, same entry — theirs serves
+      try spark.sql(
+        s"""CREATE TABLE IF NOT EXISTS $name ($schemaDdl) USING PARQUET
            |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol)
            |INTO $buckets BUCKETS
            |LOCATION '$out'
            |TBLPROPERTIES ('graft.success.mtime' = '$mtime')""".stripMargin)
+      catch {
+        case _: org.apache.spark.sql.catalyst.analysis
+            .TableAlreadyExistsException =>
+      }
     }
     spark.table(name)
   }

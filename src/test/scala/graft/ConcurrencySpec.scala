@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import graft.sources.Versioned
 import graft.sources.Versioned.{ConcurrentTableModificationException,
   PublishRaceException, TableSpec}
@@ -146,5 +147,53 @@ class ConcurrencySpec extends SparkSpec {
       assert(Versioned.read(spark, base, nm).count() == 5,
         s"$nm lost rows in the race")
     }
+  }
+
+  test("racing publishers of one artifact leave one copy and no staging dir") {
+    import scala.jdk.CollectionConverters._
+    import graft.sources.ArtifactStore
+    val root = Files.createTempDirectory("graft-art-race")
+    val racers = 4
+    def frame = spark.range(0, 240, 1, 3).selectExpr("id", "id % 7 AS k")
+    def under(dir: String): Seq[java.nio.file.Path] = {
+      val w = Files.walk(java.nio.file.Paths.get(dir))
+      try w.iterator.asScala.toList finally w.close()
+    }
+    def partFiles(dir: String): Int =
+      under(dir).count(_.getFileName.toString.startsWith("part-"))
+    /** `racers` threads publish the same artifact at once: the build
+      * waits on a barrier, so every racer has missed the _SUCCESS probe
+      * and written its own staging dir before any promotes. */
+    def race(publish: (=> DataFrame) => DataFrame): Seq[DataFrame] = {
+      val barrier = new java.util.concurrent.CyclicBarrier(racers)
+      val pool = Executors.newFixedThreadPool(racers)
+      try (1 to racers).map(_ => pool.submit(
+          new java.util.concurrent.Callable[DataFrame] {
+            def call(): DataFrame =
+              publish { barrier.await(60, TimeUnit.SECONDS); frame }
+          })).map(_.get(300, TimeUnit.SECONDS))
+      finally pool.shutdownNow()
+    }
+    def check(ref: DataFrame, refDir: String, out: String,
+        reads: Seq[DataFrame]): Unit = {
+      assert(partFiles(out) == partFiles(refDir),
+        s"$out holds more than one set of part files: ${under(out)}")
+      reads.foreach { r =>
+        assert(r.count() == ref.count())
+        assert(r.exceptAll(ref).isEmpty && ref.exceptAll(r).isEmpty)
+      }
+    }
+    val plainRef = s"$root/plain-ref"
+    val plainOut = s"$root/plain"
+    check(ArtifactStore.readOrPublish(spark, plainRef)(frame), plainRef,
+      plainOut, race(b => ArtifactStore.readOrPublish(spark, plainOut)(b)))
+    val bucketRef = s"$root/bucketed-ref"
+    val bucketOut = s"$root/bucketed"
+    check(ArtifactStore.readOrPublishBucketed(spark, bucketRef, "k", 4)(frame),
+      bucketRef, bucketOut, race(b =>
+        ArtifactStore.readOrPublishBucketed(spark, bucketOut, "k", 4)(b)))
+    val stray = under(root.toString)
+      .filter(_.getFileName.toString.startsWith(".staging-"))
+    assert(stray.isEmpty, s"lost racers' staging dirs leaked: $stray")
   }
 }

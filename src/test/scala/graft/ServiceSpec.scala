@@ -978,6 +978,76 @@ class ServiceSpec extends AnyFunSuite {
     } finally api.stop()
   }
 
+  test("R7 index maintenance DAG: a failed lake fails only its chains; the retry resumes") {
+    import java.nio.file.{Files, Paths}
+    import graft.queries.{Analytics, Dedup, Similarity, TextOps}
+    import graft.sources.{ArtifactStore, Versioned}
+    val spark = SparkSpec.spark
+    val dir = Files.createTempDirectory("graft-maintain-dag")
+    Files.copy(Paths.get(s"${SparkSpec.sfDir}/documents.parquet"),
+      dir.resolve("documents.parquet"))
+    def counts(b: String): Map[String, Long] =
+      "\"(\\w+)\":(\\d+)".r.findAllMatchIn(b)
+        .map(m => m.group(1) -> m.group(2).toLong).toMap
+    val lakes = scala.collection.mutable.Buffer.empty[String]
+    // every job a walk starts carries its node's description
+    def described(jobs: Seq[java.util.Properties]): Set[String] = {
+      val seen = jobs.map(_.getProperty("spark.job.description", "")).toSet
+      assert(seen.forall(_.startsWith("maintain:")),
+        s"walk jobs without their node's description: $seen")
+      seen
+    }
+    val api = new RestApi(Some(spark), 0).start()
+    try {
+      val url = s"http://localhost:${api.boundPort}/index/maintain"
+      val req = Some(s"""{"dir":"$dir"}""")
+      // no embeddings: the embeddings lake root fails, so IVF never
+      // runs — but the nine document chains still walk to the head
+      val ((c, b), jobs) = SparkSpec.jobsDuring(http("POST", url, req))
+      assert(c == 500 && b.contains("\"state\":\"failed\"") &&
+        b.contains("embeddings.parquet"), s"$c $b")
+      val docChains = Set("windows", "signatures", "clusters", "cms_rows",
+        "kmv_sources", "tf_grain", "doc_lens", "corpus_stats", "lm_scores")
+      assert(described(jobs) == (docChains + "corpus").map("maintain:" + _))
+      val lake = Dedup.versionedCorpus(spark, dir.toString)
+      lakes += lake
+      val v = Versioned.currentVersion(spark, lake).get
+      Seq[(String, Long) => String](Dedup.windowIndexArtifact,
+          Dedup.signatureIndexArtifact, Dedup.clusterArtifact,
+          Analytics.cmsArtifact, Analytics.kmvArtifact,
+          TextOps.tfGrainArtifact, TextOps.docLenArtifact,
+          TextOps.corpusStatsArtifact, TextOps.lmScoreArtifact)
+        .foreach { art =>
+          assert(ArtifactStore.exists(spark, art(lake, v)),
+            s"${art(lake, v)} missing after a failure elsewhere")
+        }
+
+      // the retry builds exactly the IVF chain's two versions
+      Files.copy(Paths.get(s"${SparkSpec.sfDir}/embeddings.parquet"),
+        dir.resolve("embeddings.parquet"))
+      val ((c2, b2), jobs2) = SparkSpec.jobsDuring(http("POST", url, req))
+      assert(c2 == 200 && b2.contains("\"state\":\"done\""), b2)
+      val built = counts(b2).filter(_._1.endsWith("_built"))
+      assert(built.size == 11 && built("steps_built") == 2L &&
+        built("ivf_vectors_built") == 2L &&
+        (built - "steps_built" - "ivf_vectors_built").values.forall(_ == 0L),
+        b2)
+      assert(described(jobs2) == Set("maintain:vectors", "maintain:ivf_vectors"))
+      lakes += Similarity.versionedVectors(spark, dir.toString)
+    } finally {
+      api.stop()
+      // the lakes and every artifact of them are the base's siblings
+      // sharing its name as a prefix
+      lakes.foreach { base =>
+        val parent = Paths.get(base).getParent.toFile
+        Option(parent.listFiles).toSeq.flatten
+          .filter(_.getName.startsWith(Paths.get(base).getFileName.toString))
+          .foreach(f => org.apache.commons.io.FileUtils.deleteQuietly(f))
+      }
+      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+    }
+  }
+
   test("relational twin recovers the missing number via anti-join + Gauss") {
     val spark = SparkSpec.spark
     val m = First100Relational.missing(spark, Seq(42)).head().getLong(0)

@@ -51,4 +51,57 @@ class TablesSchemaCacheSpec extends SparkSpec {
       org.apache.spark.sql.types.TimestampType)
     assert(ev.limit(1).count() == 1)
   }
+
+  test("single flight: concurrent first reads run ONE footer job; a failed inference is retried") {
+    import java.nio.file.{Files, Path}
+    import java.util.concurrent.{Callable, CyclicBarrier, Executors, TimeUnit}
+    val dir = Files.createTempDirectory("tables_single_flight")
+    try {
+      val p = s"$dir/t.parquet"
+      spark.range(0, 50, 1, 2).toDF("id").write.parquet(p)
+      val racers = 4
+      val barrier = new CyclicBarrier(racers)
+      val pool = Executors.newFixedThreadPool(racers)
+      val (reads, jobs) = SparkSpec.jobsDuring {
+        try (1 to racers).map(_ => pool.submit(new Callable[Int] {
+            def call(): Int = {
+              barrier.await(60, TimeUnit.SECONDS)
+              Tables.readParquetCached(spark, p).schema.size
+            }
+          })).map(_.get(120, TimeUnit.SECONDS))
+        finally pool.shutdownNow()
+      }
+      assert(reads == Seq.fill(racers)(1))
+      assert(jobs.size == 1,
+        "concurrent first reads of one path must share one footer job")
+
+      // a corrupted footer fails inference; restoring the same bytes and
+      // mtime restores the same cache key, which must infer afresh
+      val q = s"$dir/u.parquet"
+      spark.range(0, 30, 1, 1).toDF("id").write.parquet(q)
+      val part: Path = {
+        val ls = Files.list(java.nio.file.Paths.get(q))
+        try ls.filter(_.getFileName.toString.startsWith("part-")).findFirst.get
+        finally ls.close()
+      }
+      val bytes = Files.readAllBytes(part)
+      val mtime = part.toFile.lastModified
+      val key = Tables.fileFingerprint(spark, q)
+      Files.write(part, new Array[Byte](bytes.length))
+      part.toFile.setLastModified(mtime)
+      assert(Tables.fileFingerprint(spark, q) == key)
+      intercept[Exception](Tables.readParquetCached(spark, q))
+      Files.write(part, bytes)
+      part.toFile.setLastModified(mtime)
+      assert(Tables.fileFingerprint(spark, q) == key)
+      val (df, retried) = SparkSpec.jobsDuring(Tables.readParquetCached(spark, q))
+      assert(retried.size == 1, "the retry must re-run the inference")
+      assert(df.count() == 30)
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
+      }
+      rm(dir.toFile)
+    }
+  }
 }
