@@ -967,10 +967,8 @@ object Dedup {
         .filter(!(TextOps.uniformKeyOf(col("doc_id")) < DeltaFracLit)),
         col("doc_id"))))
 
-  /** Published location of [[windowIndex]] — exposed so the scale
-    * harness can re-read the same files with the layout undeclared
-    * (the bucketed-vs-plain comparison). */
-  private[graft] def windowIndexPath(spark: SparkSession, dir: String)
+  /** Published location of [[windowIndex]]. */
+  private def windowIndexPath(spark: SparkSession, dir: String)
       : String = {
     val key = graft.Tables.fileFingerprint(spark, s"$dir/documents.parquet")
     s"$indexBase/win$WindowChars-p$DeltaPermille-b$IndexBuckets-$key"

@@ -580,14 +580,9 @@ object Relational {
     base
   }
 
-  /** File count for the zone-map lake; the `SPARK_GRAFT_ZONE_FILES`
-    * override exists for [[graft.ScaleZone]]'s file-count axis (the
-    * 100 TB question is "does scheduling stay ∝ matching files as the
-    * file count grows"), and is part of the lake's content key, so
-    * differently-sized lakes never collide. Unset ⇒ 8 (the driver's
-    * deterministic q134 posture). */
-  private val ZonemapFiles: Int = sys.env.get("SPARK_GRAFT_ZONE_FILES")
-    .flatMap(_.toIntOption).getOrElse(8)
+  /** File count for the zone-map lake (the driver's deterministic q134
+    * posture); part of the lake's content key. */
+  private val ZonemapFiles = 8
 
   /** Scratch versioned lake holding lineitem compacted on l_orderkey
     * with zone maps — content-addressed by the source fingerprint,

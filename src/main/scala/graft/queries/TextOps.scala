@@ -2630,12 +2630,6 @@ object TextOps {
       cap: Option[Int]): DataFrame =
     bpeWordsOf(docs(spark, dir), cap)
 
-  /** The capped training table, exposed for [[graft.ScaleBpe]]'s
-    * loop-cost probe (which measures the merge loop in isolation from
-    * the one distributed word-count scan). */
-  private[graft] def bpeTrainingTable(spark: SparkSession,
-      dir: String): DataFrame = bpeWords(spark, dir, Some(BpeWordCap))
-
   private def bpeWordsOf(d: DataFrame, cap: Option[Int]): DataFrame = {
     val w = d.select(explode(wordsCol).as("word"))
       .filter(length(col("word")) > 0)
@@ -2776,7 +2770,7 @@ object TextOps {
     * r15 shape (one Spark job per round) was correct but the wrong
     * substrate: at a realistic 32k-merge vocabulary it is 32,000
     * sequential job LAUNCHES — days of scheduler overhead for kilobytes
-    * of state ([[graft.ScaleBpe]] measures the difference at 512
+    * of state (SCALE.md records the difference measured at 512
     * rounds). Semantics are bit-identical to the Spark loop and the
     * oracle's chained CTEs: `String.replace` IS the same literal
     * leftmost non-overlapping scan as Spark's `replace`, and ties in

@@ -1200,7 +1200,9 @@ object RestApi {
         case "--port" :: p :: Nil => p.toInt
         case _ => 8000
       }
-      val api = new RestApi(None, port).start()
+      val spark = graft.GraftSession.local(Runtime.getRuntime.availableProcessors())
+      spark.sparkContext.setLogLevel("WARN")
+      val api = new RestApi(Some(spark), port).start()
       println(s"serving on :${api.boundPort}")
       Thread.currentThread().join()
   }

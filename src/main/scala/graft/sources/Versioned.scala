@@ -1284,8 +1284,8 @@ object Versioned {
     * rewrite keeps the dir layout AND inherits the salt discipline —
     * a hot partition value in the FOLDED table still writes from
     * multiple concurrent tasks into `targetRowsPerFile`-bounded files
-    * ([[graft.ScaleStatsWrite]] probes this composition; judge
-    * directive #7, r18). Tracked stats/bloom columns carry over minus
+    * (VersionedLakeSpec pins this composition; SCALE.md records the
+    * measured fold, r18). Tracked stats/bloom columns carry over minus
     * any that became partition columns (dir-encoded — the publish
     * would reject them). Auto-compaction keeps its flat
     * [[compactTail]] posture (it cannot know the layout); partitioned

@@ -244,6 +244,26 @@ class MergeOnReadSpec extends SparkSpec {
         k >= 5060L && k <= 5095L }))
   }
 
+  test("full and tail compaction of one history serve identical rows") {
+    val (full, tail) = (mkBase(), mkBase())
+    for (b <- Seq(full, tail)) {
+      Versioned.publish(spark, b,
+        Seq(TableSpec("t", facts(0, 5000), statsCols = Seq("k"))))
+      for (i <- 0 until 3)
+        Versioned.appendPublish(spark, b, "t",
+          facts(5000 + 10 * i, 5010 + 10 * i), Seq("k"))
+    }
+    val fs = new Path(tail).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val baseBytes = fs.getContentSummary(
+      new Path(s"$tail/_data/t-00000001")).getLength
+    Versioned.compactPublish(spark, full, "t", Seq("k"), files = 4)
+    val v = Versioned.compactTailPublish(spark, tail, "t", sortBy = Seq("k"),
+      smallBytes = baseBytes)
+    assert(v == 5L, "publish + three appends + the tail compaction")
+    assert(collectSet(Versioned.read(spark, full, "t"))
+      == collectSet(Versioned.read(spark, tail, "t")))
+  }
+
   test("compactTail stops at a tombstone and is a no-op below two tail dirs") {
     val base = mkBase()
     Versioned.publish(spark, base,

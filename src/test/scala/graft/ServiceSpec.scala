@@ -1003,7 +1003,7 @@ class ServiceSpec extends AnyFunSuite {
       val req = Some(s"""{"dir":"$dir"}""")
       // no embeddings: the embeddings lake root fails, so IVF never
       // runs — but the nine document chains still walk to the head
-      val ((c, b), jobs) = SparkSpec.jobsDuring(http("POST", url, req))
+      val ((c, b), _, jobs) = Profile.during(spark)(http("POST", url, req))
       assert(c == 500 && b.contains("\"state\":\"failed\"") &&
         b.contains("embeddings.parquet"), s"$c $b")
       val docChains = Set("windows", "signatures", "clusters", "cms_rows",
@@ -1025,7 +1025,7 @@ class ServiceSpec extends AnyFunSuite {
       // the retry builds exactly the IVF chain's two versions
       Files.copy(Paths.get(s"${SparkSpec.sfDir}/embeddings.parquet"),
         dir.resolve("embeddings.parquet"))
-      val ((c2, b2), jobs2) = SparkSpec.jobsDuring(http("POST", url, req))
+      val ((c2, b2), _, jobs2) = Profile.during(spark)(http("POST", url, req))
       assert(c2 == 200 && b2.contains("\"state\":\"done\""), b2)
       val built = counts(b2).filter(_._1.endsWith("_built"))
       assert(built.size == 11 && built("steps_built") == 2L &&

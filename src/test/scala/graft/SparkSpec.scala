@@ -18,35 +18,6 @@ object SparkSpec {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
-
-  /** `f`'s result and the local properties of every job started while
-    * it ran, from any thread. The listener bus delivers events in
-    * order, so once a marker job submitted after `f` is seen, every
-    * earlier job has been counted. */
-  def jobsDuring[A](f: => A): (A, Seq[java.util.Properties]) = {
-    val marker = s"jobs-during-${java.util.UUID.randomUUID}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val p = Option(j.properties).getOrElse(new java.util.Properties)
-        if (p.getProperty("spark.jobGroup.id") == marker) drained.countDown()
-        else seen.add(p)
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val out = f
-      spark.sparkContext.setJobGroup(marker, marker)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.clearJobGroup()
-      require(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus did not drain")
-      import scala.jdk.CollectionConverters._
-      (out, seen.asScala.toSeq)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 }
 
 trait SparkSpec extends AnyFunSuite {

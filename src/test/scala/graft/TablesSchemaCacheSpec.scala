@@ -62,7 +62,7 @@ class TablesSchemaCacheSpec extends SparkSpec {
       val racers = 4
       val barrier = new CyclicBarrier(racers)
       val pool = Executors.newFixedThreadPool(racers)
-      val (reads, jobs) = SparkSpec.jobsDuring {
+      val (reads, _, jobs) = Profile.during(spark) {
         try (1 to racers).map(_ => pool.submit(new Callable[Int] {
             def call(): Int = {
               barrier.await(60, TimeUnit.SECONDS)
@@ -94,7 +94,7 @@ class TablesSchemaCacheSpec extends SparkSpec {
       Files.write(part, bytes)
       part.toFile.setLastModified(mtime)
       assert(Tables.fileFingerprint(spark, q) == key)
-      val (df, retried) = SparkSpec.jobsDuring(Tables.readParquetCached(spark, q))
+      val (df, _, retried) = Profile.during(spark)(Tables.readParquetCached(spark, q))
       assert(retried.size == 1, "the retry must re-run the inference")
       assert(df.count() == 30)
     } finally {
